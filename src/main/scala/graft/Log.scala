@@ -4,7 +4,7 @@ package graft
   * degrade and recovery messages go through here at WARN so cluster log
   * aggregation actually surfaces them — a bare `System.err.println` on
   * an executor or driver is invisible to most log pipelines and carries
-  * no level/timestamp for alerting to key on. Library code (sources,
+  * no level/timestamp for alerting to key on. Library code (sources, ingest,
   * streaming) must use this; the CLI harness mains (`Bench`, `Verify`,
   * `ScaleCheck`, …) keep printing to stderr on purpose — there stderr
   * IS the user interface.

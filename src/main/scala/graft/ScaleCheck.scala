@@ -453,67 +453,6 @@ object ScaleCheck {
           .filter(col("event_type") =!= "_hb").count()
       })
 
-      // Glob planning over a many-directory layout — the 100 TB shape is
-      // thousands of partition directories. dirs = 100·R, two files each;
-      // then 1% of the dirs get a crashed-export fence (manifest + staged
-      // brand-new file — the protocol state EdfDataSourceSpec drives
-      // through the real writer). Planning wall must stay flat PER
-      // DIRECTORY across decades: EdfPlanningRpcSpec pins the per-load RPC
-      // budget, this leg pins the wall-clock side. Layout creation is
-      // untimed; planning opens no data file.
-      val (tGlobS, tGlobF, nGlobParts, nGlobPartsF, nGlobDirs,
-          tMulti10, tMulti100) =
-        if (legFilter.forall(_.contains("glob_plan"))) {
-          import java.nio.file.{Files => JFiles, Paths => JPaths}
-          val nDirs = 100 * r
-          val base = JFiles.createTempDirectory("scale_glob").toString
-          try {
-            (0 until nDirs).foreach { i =>
-              val d = JPaths.get(s"$base/part$i")
-              JFiles.createDirectories(d)
-              JFiles.write(d.resolve("rec0.edf"), Array[Byte](0))
-              JFiles.write(d.resolve("rec1.edf"), Array[Byte](0))
-            }
-            def planParts(): Long = spark.read.format("edf")
-              .load(s"$base/*/*.edf").rdd.getNumPartitions.toLong
-            val (tS, nS) = time(planParts())
-            // Multi-path planning wall: load(dir_0, …, dir_{M-1}) over
-            // the same layout at M ∈ {10, 100} — a union of M per-spec
-            // plans (one listing + one isDirectory HEAD each, per the
-            // EdfPlanningRpcSpec member-sum pin) must stay LINEAR in M
-            // with the same per-directory constant as the glob, not
-            // quadratic in the union/dedup step.
-            def planMulti(m: Int): Long = spark.read.format("edf")
-              .load((0 until m).map(i => s"$base/part$i"): _*)
-              .rdd.getNumPartitions.toLong
-            val (tM10, nM10) = time(planMulti(10))
-            val (tM100, nM100) = time(planMulti(100))
-            require(nM10 == 20L && nM100 == 200L,
-              s"multi-path planned $nM10/$nM100 partitions (want 20/200)")
-            (0 until nDirs by 100).foreach { i =>
-              val stage = JPaths.get(s"$base/part$i/_temporary/q/task-0-0")
-              JFiles.createDirectories(stage)
-              JFiles.write(stage.resolve("new.edf"), Array[Byte](0))
-              JFiles.write(JPaths.get(s"$base/part$i/" +
-                graft.sources.EdfBatchWrite.fenceName(
-                  graft.sources.EdfBatchWrite.ManifestPrefix, 1, "q")),
-                s"${stage.resolve("new.edf")}\tnew.edf\n"
-                  .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            }
-            val (tF, nF) = time(planParts())
-            require(nS == 2L * nDirs && nF == nS + nDirs / 100,
-              s"glob_plan planned $nS/$nF partitions over $nDirs dirs")
-            (tS, tF, nS, nF, nDirs, tM10, tM100)
-          } finally {
-            // A failed require must not leak the 100·R-directory layout.
-            val walk = JFiles.walk(JPaths.get(base))
-            try walk.sorted(
-              java.util.Comparator.reverseOrder[java.nio.file.Path]())
-              .forEach(p => JFiles.deleteIfExists(p))
-            finally walk.close()
-          }
-        } else (-1.0, -1.0, -1L, -1L, -1, -1.0, -1.0)
-
       println(f"""{"rep":$r,"docs":$nDocs,"lsh_cand_s":$tCand%.2f,"cands":$nCand,""" +
         f""""dedup_cluster_s":$tFull%.2f,"clusters":$nClusters,""" +
         f""""simhash_s":$tSim%.2f,"sim_pairs":$nSim,""" +
@@ -534,13 +473,7 @@ object ScaleCheck {
         f""""pq_search_s":$tPq%.2f,"pq_rows":$nPq,""" +
         f""""graph_tri_s":$tGraph%.2f,"triangles":$nTri,""" +
         f""""pagerank_s":$tPr%.2f,"pr_nodes":$nNodes,""" +
-        f""""stream_s":$tStream%.2f,"stream_windows":$nWindows,""" +
-        f""""glob_dirs":$nGlobDirs,"glob_plan_steady_s":$tGlobS%.3f,""" +
-        f""""glob_plan_parts":$nGlobParts,""" +
-        f""""glob_plan_fenced_s":$tGlobF%.3f,""" +
-        f""""glob_fenced_parts":$nGlobPartsF,""" +
-        f""""multipath10_plan_s":$tMulti10%.3f,""" +
-        f""""multipath100_plan_s":$tMulti100%.3f}""")
+        f""""stream_s":$tStream%.2f,"stream_windows":$nWindows}""")
     }
     spark.stop()
   }

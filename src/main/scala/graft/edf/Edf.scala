@@ -80,8 +80,9 @@ object Edf {
   }
 
   /** Parse only the fixed + per-signal headers (first 256 + ns·256 bytes):
-    * signals and annotations stay empty. Serves metadata-only reads — a
-    * channel inventory over a corpus never needs the waveforms.
+    * signals and annotations stay empty. Ingest picks its channels from
+    * these labels before deciding what [[parseSignals]] decodes, and the
+    * `edf` source's metadata-only reads never need the waveforms.
     */
   def parseHeader(bytes: Array[Byte]): EdfFile =
     parseImpl(bytes, headerOnly = true)
@@ -343,11 +344,11 @@ object Edf {
       physMin: Double = -0.005,
       physMax: Double = 0.005): Array[Byte] = {
     require(channels.nonEmpty, "no channels")
-    // Write-side mirror of the parse-side allocation guards: a corrupt
-    // input row reaching the sink with sfreq <= 0 (or a degenerate
-    // record duration) would otherwise make nSamplesPerRec 0 and
-    // nRecords ceil(x/0) = Int.MaxValue — a task-hanging record loop and
-    // an Int.MaxValue TAL-slot allocation. Fail catchably instead.
+    // Write-side mirror of the parse-side allocation guards: a caller
+    // passing sfreq <= 0 (or a degenerate record duration) would otherwise
+    // make nSamplesPerRec 0 and nRecords ceil(x/0) = Int.MaxValue — a
+    // task-hanging record loop and an Int.MaxValue TAL-slot allocation.
+    // Fail catchably instead.
     require(recordDurationSec > 0, s"bad record duration $recordDurationSec")
     val nSamplesPerRec = math.round(sfreq * recordDurationSec).toInt
     require(nSamplesPerRec > 0,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -32,44 +33,35 @@ object TextSketchQueries {
       val width = 64
       val md5int = (c: Column) =>
         conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-      // Persisted: the exact vocab aggregate (the one full corpus
-      // explode+shuffle) feeds THREE consumers — the bucket expansion (via
-      // est's join left side AND cells) and the top-10 ranking; without the
-      // persist the r15 before-plan repeats the whole scan+Generate+
-      // aggregate subtree three times. Cached size is one row per distinct
-      // token — the sketch's own working set.
+      // The exact vocab aggregate (the one full corpus explode+shuffle)
+      // feeds the bucket expansion twice — est's join left side AND cells.
+      // Both read (tok, n), so the two subtrees are identical and exchange
+      // reuse scans and shuffles the corpus once; no persist, which a
+      // lazily returned query could never release.
       val vocab = Tables.documents(s, dir)
         .select(explode(toks(col("text"))).as("tok"))
         .filter(length(col("tok")) > 0)
         .groupBy("tok").agg(count(lit(1)).as("n"))
-        .persist()
       val buck = vocab
         .select(col("tok"), col("n"),
           explode(array((0 until depth).map(lit): _*)).as("k"))
         .withColumn("bucket",
           pmod(md5int(concat_ws(":", col("k"), col("tok"))), lit(width)))
       val cells = buck.groupBy("k", "bucket").agg(sum("n").as("cell"))
+      // Every vocab token gets an estimate, so est carries the exact count
+      // too and the top-10 ranks straight off it.
       val est = buck.join(cells, Seq("k", "bucket"))
-        .groupBy("tok").agg(min("cell").as("cm_est"))
+        .groupBy("tok", "n").agg(min("cell").as("cm_est"))
       // True top-10 via orderBy+limit (TakeOrderedAndProject: per-partition
-      // top-10, merge of ≤10-row heaps) — never a global single-partition
-      // WindowExec over the unbounded vocabulary. The rank is then
-      // recomputed INSIDE the 10-row set as 1 + |rows sorting strictly
-      // before it| (broadcast 10×10 self-compare), which on the strict
-      // (n desc, tok) total order — tok is unique after the groupBy — is
-      // exactly row_number() over the same order: identical rows, identical
-      // rn, no unpartitioned window anywhere in the plan.
-      val top = vocab.orderBy(col("n").desc, col("tok")).limit(10)
-      val ranked = top.join(
-          broadcast(top.select(col("tok").as("tok_y"), col("n").as("n_y"))),
-          col("n_y") > col("n") ||
-            (col("n_y") === col("n") && col("tok_y") < col("tok")),
-          "left")
-        .groupBy("tok", "n")
-        .agg((count(col("tok_y")) + 1).cast("int").as("rn"))
-      ranked.join(est, "tok")
+      // top-10, merge of ≤10-row heaps), THEN row_number() over the same
+      // (n desc, tok) total order — tok is unique after the groupBy. The
+      // unpartitioned window sees only the 10-row limit output, never the
+      // unbounded vocabulary.
+      val byCount = Seq(col("n").desc, col("tok"))
+      est.orderBy(byCount: _*).limit(10)
         .select(col("tok"), col("n").as("exact_n"), col("cm_est"),
-          (col("cm_est") - col("n")).as("overestimate"), col("rn"))
+          (col("cm_est") - col("n")).as("overestimate"),
+          row_number().over(Window.orderBy(byCount: _*)).as("rn"))
         .orderBy("rn")
     },
     Some("""with tok as (

@@ -77,7 +77,6 @@ object EdfDataSource {
     * `load(pattern)` argument), where no JSON decoding applies.
     */
   private[sources] def parsePaths(s: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     def bad(why: String): Nothing = throw new IllegalArgumentException(
       s"edf: the 'paths' option must be a whole JSON array of strings " +
         s"(the encoding DataFrameReader.load(a, b, …) produces) — " +
@@ -91,8 +90,7 @@ object EdfDataSource {
       try mapper.readValue(s,
         classOf[com.fasterxml.jackson.databind.JsonNode])
       catch {
-        case scala.util.control.NonFatal(e) =>
-          bad(s"JSON parse failed: ${e.getMessage}")
+        case NonFatal(e) => bad(s"JSON parse failed: ${e.getMessage}")
       }
     if (node != null && node.isArray &&
         node.elements.asScala.forall(_.isTextual))
@@ -160,14 +158,14 @@ private class EdfTable(properties: Map[String, String])
   * concern); all channels of a file must share one sampling rate — the
   * writer validates and fails loudly otherwise.
   *
-  * Concurrency contract: the commit protocol makes each job's output
-  * reader-ATOMIC (all-or-nothing visibility, crash recovery via
-  * [[EdfExportRecovery.rollForward]]), but it is NOT full isolation
-  * between concurrent writers of the SAME basename: two exports racing
-  * on one file name resolve last-wins by (commit sequence, queryId) —
-  * deterministic, but which job "wins" each contested name is
-  * scheduling-dependent, exactly as plain rename-overwrite was.
-  * Concurrent jobs writing DISJOINT file names compose safely.
+  * Commit contract: tasks stage into attempt-private directories, so a
+  * retried, speculative or concurrent writer can never clobber committed
+  * output, and nothing reaches a final name before job commit. Job commit
+  * renames each staged file to its final name; every rename is atomic,
+  * the loop over them is not — a reader listing the directory DURING
+  * promotion can see some new files next to some old ones, exactly as
+  * with Hadoop's v1 file committer. Two jobs writing the same basename
+  * resolve last-rename-wins.
   */
 private class EdfWriteBuilder(targetDir: String, queryId: String,
     schema: StructType, physMin: Double, physMax: Double,
@@ -211,14 +209,12 @@ private class EdfBatchWrite(targetDir: String, queryId: String,
   private def stagingDir: String =
     s"${EdfBatchWrite.TempDirName}/${EdfBatchWrite.sanitize(queryId)}"
 
-  /** Set once [[commit]] publishes the staged manifest (the commit
-    * point). From that instant the staged files are reader-visible
-    * through the manifest redirect, and if promotion then fails
-    * mid-loop, files already promoted replaced their destinations
-    * (Rename.OVERWRITE — the pre-existing versions are gone) and the
-    * staged remainder is the ONLY surviving copy of those task outputs
-    * — so the abort that follows must leave the staging tree AND the
-    * manifest intact for recovery instead of deleting them.
+  /** Set once [[commit]] starts renaming staged files to final names. If
+    * promotion then fails mid-loop, files already promoted replaced their
+    * destinations (Rename.OVERWRITE — the pre-existing versions are gone)
+    * and the staged remainder is the ONLY surviving copy of those task
+    * outputs — so the abort that follows must leave the staging tree in
+    * place instead of deleting it.
     */
   @volatile private var promotionStarted = false
 
@@ -227,59 +223,13 @@ private class EdfBatchWrite(targetDir: String, queryId: String,
     EdfWriterFactory(targetDir, stagingDir, schema, conf, physMin, physMax,
       recordDurationSec)
 
-  /** Name of this job's published manifest, for the abort-path message. */
-  @volatile private var publishedManifest: String = null
-
-  /** Writes `content` to a temp path in this query's staging tree and
-    * publishes it at `dest` with ONE atomic rename — readers can never
-    * observe a partial fence file.
-    */
-  private def publishFence(fs: FileSystem,
-      fc: org.apache.hadoop.fs.FileContext, target: Path, dest: Path,
-      content: String): Unit = {
-    val tmp = new Path(target, s"$stagingDir/${dest.getName}.tmp")
-    val os = fs.create(tmp, true)
-    try os.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(dest),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Two-phase commit with an ATOMIC commit point: tasks stream into
-    * attempt-unique dirs under `_temporary/` (so a retried or speculative
-    * attempt can never clobber a committed file — its abort deletes only
-    * attempt-private paths); the driver then, AFTER Spark's commit
-    * coordination has picked exactly one winning attempt per partition:
-    *
-    *  1. validates (duplicate final basenames fail loudly before
-    *     anything is touched),
-    *  2. takes the next commit SEQUENCE for this directory
-    *     (max over existing fence files + 1 — a clock-free total order:
-    *     a re-run after a crash always outranks the crashed export) and
-    *     publishes a `_STAGED_MANIFEST-<seq>-<queryId>` listing every
-    *     (stagedPath, finalName) pair with ONE atomic rename — the job's
-    *     commit point: a directory listing before it resolves to the old
-    *     files; one after it resolves every listed name through its
-    *     staged copy ([[EdfScanBuilder]] reads fences), so a reader
-    *     observes the complete old state or the complete new state,
-    *     never a half-promoted mix — the all-or-nothing behavior of the
-    *     reference's transactional per-subject load
-    *     (`warehouse/snowflake_client.py:133-152`),
-    *  3. promotes staged files to final names (each rename atomic),
-    *  4. publishes the `_COMMITTED-<seq>-<queryId>` marker (same
-    *     entries), then retires its own manifest and staging tree — the
-    *     marker FENCES any lower-sequence crashed manifest still lying
-    *     around: per name, the highest-(seq, qid) fence wins, so a stale
-    *     manifest can neither hijack reads nor make recovery overwrite
-    *     newer data, and
-    *  5. retires ALL committed markers iff no staged manifest remains
-    *     (the steady state carries zero fence files).
-    *
-    * A crash or failure anywhere in step 3 leaves the manifest + staged
-    * files in place: readers keep resolving the new state, and
-    * [[EdfExportRecovery.rollForward]] completes the promotion
-    * idempotently (roll FORWARD — the manifest only exists once the job
-    * fully committed its task set).
+  /** Two-phase commit: tasks stream into attempt-unique dirs under
+    * `_temporary/<queryId>` (a retried or speculative attempt's abort
+    * deletes only attempt-private paths); the driver then, AFTER Spark's
+    * commit coordination has picked exactly one winning attempt per
+    * partition, validates the whole file set (duplicate and hidden final
+    * basenames fail loudly before anything is touched), renames every
+    * staged file to its final name and drops this query's staging tree.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val target = new Path(targetDir)
@@ -301,49 +251,16 @@ private class EdfBatchWrite(targetDir: String, queryId: String,
     // Atomic rename-with-overwrite (FileContext, not FileSystem.rename):
     // a delete-then-rename spelling has a window where a failed rename
     // leaves NEITHER the pre-existing committed file nor its staged
-    // replacement — the abort that follows would delete the staging tree
-    // too. Posix/HDFS rename-over replaces in one step.
+    // replacement. Posix/HDFS rename-over replaces in one step.
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       fs.makeQualified(target).toUri, conf.value)
-    if (pairs.nonEmpty) {
-      val mySeq =
-        (EdfBatchWrite.listFences(fs, target).map(_.seq) :+ 0).max + 1
-      val manifest = new Path(target,
-        EdfBatchWrite.fenceName(EdfBatchWrite.ManifestPrefix, mySeq, queryId))
-      val content = pairs.map { case (tmp, name) =>
-        s"${fs.makeQualified(new Path(tmp))}\t$name"
-      }.mkString("", "\n", "\n")
-      publishFence(fs, fc, target, manifest, content)
-      // Only AFTER the publish rename returned: a failed publish means
-      // readers are still on the complete OLD state and nothing needs
-      // recovery — the pre-commit-point abort (clean staging) is correct
-      // for that window, and claiming otherwise would mislead operators.
-      publishedManifest = manifest.getName
-      promotionStarted = true
-      pairs.foreach { case (tmp, name) =>
-        fc.rename(fs.makeQualified(new Path(tmp)),
-          fs.makeQualified(new Path(target, name)),
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      }
-      // Promotion complete: publish the committed marker BEFORE retiring
-      // the manifest, so this commit keeps fencing lower-sequence crashed
-      // manifests without a gap; then the manifest, then the staging
-      // tree. A crash between the steps only leaks fence files /
-      // an empty-ish staging dir that rollForward reclaims, never data.
-      publishFence(fs, fc, target, new Path(target,
-        EdfBatchWrite.fenceName(EdfBatchWrite.CommittedPrefix, mySeq,
-          queryId)), content)
-      fs.delete(manifest, false)
+    promotionStarted = true
+    pairs.foreach { case (tmp, name) =>
+      fc.rename(fs.makeQualified(new Path(tmp)),
+        fs.makeQualified(new Path(target, name)),
+        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
     fs.delete(new Path(target, stagingDir), true)
-    // Steady-state cleanup: markers only matter while a lower-sequence
-    // crashed manifest could contest their names — when no staged
-    // manifest remains, retire every marker (including this commit's).
-    val fences = EdfBatchWrite.listFences(fs, target)
-    if (!fences.exists(!_.committed))
-      fences.filter(_.committed)
-        .foreach(f => try fs.delete(f.path, false)
-          catch { case NonFatal(_) => () })
     // Drop the shared _temporary root too iff no other query is staging
     // under it (non-recursive delete only succeeds on an empty dir).
     try fs.delete(new Path(target, EdfBatchWrite.TempDirName), false)
@@ -351,14 +268,11 @@ private class EdfBatchWrite(targetDir: String, queryId: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    val fs = new Path(targetDir).getFileSystem(conf.value)
     if (promotionStarted) {
-      // The manifest is published → some files may have reached (and
-      // REPLACED) final names; the staged remainder is the only copy of
-      // the rest. Keep the staging tree AND manifest — readers keep
-      // seeing the consistent new state through the manifest redirect —
-      // and say so LOUDLY: an operator must know recovery data exists,
-      // where it is, and how to finish the job.
-      val fs = new Path(targetDir).getFileSystem(conf.value)
+      // Some files may have reached (and REPLACED) final names; the staged
+      // remainder is the only copy of the rest. Keep the staging tree and
+      // say so LOUDLY: an operator must know where the data is.
       val pairs = messages.collect { case EdfWriteCommit(fs0) => fs0 }.flatten
       val (staged, promoted) = pairs.partition { case (tmp, _) =>
         try fs.exists(new Path(tmp)) catch { case NonFatal(_) => true }
@@ -369,17 +283,13 @@ private class EdfBatchWrite(targetDir: String, queryId: String,
           s"[${promoted.map(_._2).mkString(", ")}]; ${staged.size} still " +
           s"staged under $targetDir/$stagingDir " +
           s"[${staged.map(_._2).mkString(", ")}]. Staged files are the " +
-          s"ONLY copy of those outputs; manifest $publishedManifest " +
-          "keeps readers on the new state. Run " +
-          "graft.sources.EdfExportRecovery.rollForward(" +
-          s"\"$targetDir\", hadoopConf) to complete the promotion.")
+          "ONLY copy of those outputs; move them to their final names " +
+          "or re-run the export.")
       return
     }
-    // No task output ever reached a final name (the manifest was never
-    // published); drop THIS query's staging tree only — a concurrent
-    // query's staging must survive. The shared root goes too iff empty
-    // (non-recursive delete, as in commit).
-    val fs = new Path(targetDir).getFileSystem(conf.value)
+    // No task output ever reached a final name; drop THIS query's staging
+    // tree only — a concurrent query's staging must survive. The shared
+    // root goes too iff empty (non-recursive delete, as in commit).
     try {
       fs.delete(new Path(targetDir, stagingDir), true)
       fs.delete(new Path(targetDir, EdfBatchWrite.TempDirName), false)
@@ -389,8 +299,6 @@ private class EdfBatchWrite(targetDir: String, queryId: String,
 
 private[graft] object EdfBatchWrite {
   val TempDirName = "_temporary"
-  val ManifestPrefix = "_STAGED_MANIFEST-"
-  val CommittedPrefix = "_COMMITTED-"
   def sanitize(s: String): String = s.replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** The ONE spelling of the hidden-name convention (Spark's FileIndex,
@@ -406,172 +314,6 @@ private[graft] object EdfBatchWrite {
     s"edf write: hidden output basenames $names — underscore/dot-prefixed " +
       "names are reserved for bookkeeping and invisible to readers; " +
       "rename the input `path` values"
-
-  /** One commit-protocol fence file: a staged manifest (in-flight or
-    * crashed export) or a committed marker (a finished export that must
-    * stay visible while LOWER-sequence crashed manifests linger, so
-    * staleness is decidable without clocks). Both carry the same
-    * `stagedPath TAB finalName` lines. `(seq, qid)` totally orders
-    * commits: the sequence number is taken as max(existing)+1 at commit
-    * time, so a re-run after a crash always fences the crashed export;
-    * the queryId string breaks the (pathological) tie of two exports
-    * that scanned concurrently — concurrent exporters of the SAME file
-    * name remain last-wins-undefined, exactly as plain rename-overwrite
-    * was, but the resolution is at least deterministic.
-    */
-  final case class Fence(seq: Int, qid: String, path: Path,
-      committed: Boolean) {
-    def key: (Int, String) = (seq, qid)
-  }
-
-  def fenceName(prefix: String, seq: Int, queryId: String): String =
-    f"$prefix$seq%09d-${sanitize(queryId)}"
-
-  private def parseFence(p: Path): Option[Fence] = {
-    val n = p.getName
-    val (prefix, committed) =
-      if (n.startsWith(ManifestPrefix)) (ManifestPrefix, false)
-      else if (n.startsWith(CommittedPrefix)) (CommittedPrefix, true)
-      else return None
-    val rest = n.stripPrefix(prefix)
-    val dash = rest.indexOf('-')
-    // The sequence segment [[fenceName]] writes is AT LEAST nine digits
-    // (%09d): anything shorter is not this protocol's fence — treating
-    // it as a stray file keeps a lucky all-digit queryId prefix from
-    // ever masquerading as a huge sequence number and hijacking the
-    // total order.
-    if (dash < 9) None
-    else rest.substring(0, dash).toIntOption
-      .map(seq => Fence(seq, rest.substring(dash + 1), p, committed))
-  }
-
-  /** All fence files in `target`, ordered by commit order (seq, qid). */
-  def listFences(fs: FileSystem, target: Path): Seq[Fence] =
-    if (!fs.exists(target)) Nil
-    else fs.listStatus(target).toSeq.filter(_.isFile)
-      .flatMap(s => parseFence(s.getPath))
-      .sortBy(_.key)
-
-  /** Fences parsed from an already-obtained listing (the reader's path —
-    * no second listStatus round trip).
-    */
-  def fencesOf(paths: Seq[Path]): Seq[Fence] =
-    paths.flatMap(parseFence).sortBy(_.key)
-
-  /** Parse a fence file's entries: one `stagedPath TAB finalName` line
-    * per file. Shared by the reader's redirect resolution and
-    * [[EdfExportRecovery.rollForward]].
-    */
-  def readManifest(fs: FileSystem, m: Path): Seq[(String, String)] = {
-    val len = fs.getFileStatus(m).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(m)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-      .split('\n').toSeq.filter(_.nonEmpty).map { line =>
-        val i = line.indexOf('\t')
-        require(i > 0, s"malformed manifest line in $m: '${line.take(80)}'")
-        (line.substring(0, i), line.substring(i + 1))
-      }
-  }
-
-  /** Every fence's entries, read ONCE, grouped per final name in fence
-    * order (ascending (seq, qid)) — the shared input to the per-name
-    * resolution rule readers and recovery apply: walk a name's mentions
-    * newest-first and follow the first fence that can DELIVER it.
-    * Fences whose file vanished between listing and read were retired
-    * by a completing commit — their promotion finished, so skipping
-    * them is correct.
-    */
-  def mentionsByName(fs: FileSystem,
-      fences: Seq[Fence]): Map[String, Seq[(Fence, String)]] = {
-    val out = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[(Fence, String)]]
-    fences.sortBy(_.key).foreach { f =>
-      val entries =
-        try readManifest(fs, f.path)
-        catch { case _: java.io.FileNotFoundException => Nil }
-      entries.foreach { case (staged, name) =>
-        out.getOrElseUpdate(name,
-          scala.collection.mutable.ArrayBuffer.empty) += ((f, staged))
-      }
-    }
-    out.view.mapValues(_.toSeq).toMap
-  }
-}
-
-/** Crash recovery for the EDF export's two-phase commit: if a job died
-  * (or was sabotaged) between publishing its `_STAGED_MANIFEST-*` and
-  * finishing promotion, the manifest + staged files survive and readers
-  * already resolve the new state through them — this helper makes that
-  * state durable by replaying the manifest. Roll-FORWARD is always
-  * correct because the manifest is only ever published after every task
-  * committed its output (the job's commit point). Idempotent: entries
-  * whose staged file is gone were already promoted.
-  */
-object EdfExportRecovery {
-
-  /** Resolve every name mentioned by the staged manifests under
-    * `targetDir` with the reader's own rule — walk its mentions
-    * newest-first and follow the first fence that can DELIVER it: a
-    * committed marker or an existing final file keeps the final (a
-    * stale crashed export can never overwrite newer data), a manifest
-    * whose staged copy survives gets it promoted, and a ghost mention
-    * (no staged, no final) falls through to the next-older fence — so
-    * recovery never discards the only surviving copy of an output.
-    * Surviving-but-outranked staged copies are logged as dropped. Then
-    * every manifest, its query's staging tree, and the committed
-    * markers are retired — the steady state carries zero fence files.
-    * Returns the final names promoted by THIS call; idempotent.
-    */
-  def rollForward(targetDir: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    val target = new Path(targetDir)
-    val fs = target.getFileSystem(conf)
-    val fences = EdfBatchWrite.listFences(fs, target)
-    if (fences.isEmpty) return Nil
-    val mentions = EdfBatchWrite.mentionsByName(fs, fences)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(target).toUri, conf)
-    val promoted = Seq.newBuilder[String]
-    mentions.foreach { case (name, ms) =>
-      val finalPath = new Path(target, name)
-      val finalExists = fs.exists(finalPath)
-      var delivered = false
-      ms.reverseIterator.foreach { case (fence, staged) =>
-        val stagedExists = fs.exists(new Path(staged))
-        if (!delivered) {
-          if (fence.committed) delivered = true // committed final wins
-          else if (stagedExists) {
-            fc.rename(fs.makeQualified(new Path(staged)),
-              fs.makeQualified(finalPath),
-              org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-            promoted += name
-            delivered = true
-          } else if (finalExists)
-            // Staged gone while a final exists: this fence evidently
-            // promoted it already — the final is the newest bytes.
-            delivered = true
-          // else: a ghost mention — fall through to the next-older fence.
-        } else if (stagedExists)
-          graft.Log.warn(s"[edf-export] rollForward: dropping stale " +
-            s"staged '$name' from ${fence.path.getName} — a newer " +
-            "export owns that file")
-      }
-    }
-    // Every manifest is resolved: retire them, their queries' staging
-    // trees (the fence name encodes the sanitized queryId), and the
-    // committed markers, which now have nothing left to fence.
-    fences.foreach { f =>
-      try fs.delete(f.path, false) catch { case NonFatal(_) => () }
-      if (!f.committed)
-        fs.delete(new Path(target,
-          s"${EdfBatchWrite.TempDirName}/${f.qid}"), true)
-    }
-    try fs.delete(new Path(target, EdfBatchWrite.TempDirName), false)
-    catch { case NonFatal(_) => () }
-    promoted.result()
-  }
 }
 
 /** Serializable executor-side factory — a case class (not an anonymous
@@ -757,303 +499,47 @@ private class EdfScanBuilder(pathSpecs: Seq[String], chunkRecords: Int,
       // One load spec (a literal dir/file or a glob) planned in full;
       // a multi-path `load(a, b, …)` unions the per-spec plans below.
       def planSpec(pathSpec: String): Seq[EdfInputPartition] = {
-      val p = new Path(pathSpec)
-      val fs = p.getFileSystem(conf)
-
-      // Fence resolution for ONE directory's worth of files — shared by
-      // directory loads and (per parent directory) glob loads, so both
-      // paths give the same atomic-visibility guarantee. An in-flight
-      // (or crashed mid-promotion) export publishes a
-      // `_STAGED_MANIFEST-<seq>-<qid>` redirect table as its atomic
-      // commit point; a finished export leaves a `_COMMITTED-…` marker
-      // while older crashed manifests linger. Resolving every name
-      // through the HIGHEST-(seq, qid) fence mentioning it gives this
-      // listing a CONSISTENT view: an in-flight export's files read
-      // their staged copies (falling back to the final once promoted)
-      // so a reader sees the complete new state — never a half-promoted
-      // mix — while a crashed export's manifest is fenced per name by
-      // any newer commit (no clocks: sequence numbers are taken at
-      // commit time, so a re-run always outranks the crash it
-      // replaces). Listings without fence files (the steady state) pay
-      // nothing: no staging listing, no manifest reads.
-      // `nameOk` gates which MENTIONED-but-unlisted names this load
-      // serves (a glob only serves pending names matching its pattern).
-      def resolveDir(dir: Path, dataFiles: Seq[String],
-          fences: Seq[EdfBatchWrite.Fence],
-          nameOk: String => Boolean): Seq[EdfInputPartition] = {
-        if (fences.isEmpty) return dataFiles.map(EdfInputPartition(_))
-        val mentions = EdfBatchWrite.mentionsByName(fs, fences)
-        // Staged-copy existence for every mention, answered from ONE
-        // recursive staging-tree listing instead of an fs.exists round
-        // trip per redirected name — on an object store that's one LIST
-        // versus O(fences) HEADs. Snapshot semantics are the same as
-        // the probes': a promotion racing this plan moves files
-        // staged→final atomically, and the reader's ordered candidates
-        // (staged first, final fallback) absorb exactly that race.
-        val stagedSet: Set[String] = {
-          val out = Set.newBuilder[String]
-          try {
-            val it = fs.listFiles(
-              new Path(dir, EdfBatchWrite.TempDirName), true)
-            while (it.hasNext) out += it.next().getPath.toString
-          } catch { case _: java.io.FileNotFoundException => () }
-          out.result()
-        }
-        def stagedExists(staged: String): Boolean =
-          stagedSet.contains(fs.makeQualified(new Path(staged)).toString)
-
-        val listedNames =
-          dataFiles.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
-        val fromListing = dataFiles.map { f =>
-          val name = f.substring(f.lastIndexOf('/') + 1)
-          mentions.get(name).map(_.last) match {
-            case Some((fence, staged))
-                if !fence.committed && stagedExists(staged) =>
-              EdfInputPartition(f, Seq(staged, f))
-            // Committed marker, retired/promoted manifest entry, or an
-            // unmentioned steady-state file: the final bytes are the
-            // truth.
-            case _ => EdfInputPartition(f)
-          }
-        }
-        // Mentioned names with no final file in the listing. For an
-        // in-flight manifest that's a brand-new file still staged —
-        // part of the committed state (qualified logical path, so the
-        // `path` column spells the same before and after promotion).
-        // Walk mentions newest-first: a committed marker ends the
-        // search (its final is the truth — absent from the listing
-        // means promoted-after-listing or externally removed); a ghost
-        // mention (manifest whose staged copy vanished without a
-        // final — e.g. staging destroyed after an ambiguous publish)
-        // falls through to the next-older fence, so the newest
-        // SURVIVING copy is served and nothing fails with
-        // FileNotFoundException.
-        def resolvePending(name: String,
-            ms: Seq[(EdfBatchWrite.Fence, String)]):
-            Option[EdfInputPartition] = {
-          val logical = fs.makeQualified(new Path(dir, name)).toString
-          val it = ms.reverseIterator
-          while (it.hasNext) {
-            val (fence, staged) = it.next()
-            if (fence.committed)
-              return if (fs.exists(new Path(logical)))
-                Some(EdfInputPartition(logical)) else None
-            if (stagedExists(staged))
-              return Some(EdfInputPartition(logical, Seq(staged, logical)))
-          }
-          if (fs.exists(new Path(logical))) Some(EdfInputPartition(logical))
-          else None // a true ghost: no copy of this name survives
-        }
-        val pending = mentions.toSeq.collect {
-          case (name, ms) if !listedNames.contains(name) && nameOk(name) =>
-            resolvePending(name, ms)
-        }.flatten
-        fromListing ++ pending
-      }
-
-      // The hidden-name convention ([[EdfBatchWrite.hiddenName]]) is what
-      // keeps this source's own fence files and staging tree out of data
-      // scans.
-      def hidden(name: String): Boolean = EdfBatchWrite.hiddenName(name)
-      // The directory-load data gate, applied to listed files AND to
-      // pending (mentioned-but-unlisted) names, so a manifest mentioning
-      // a non-edf or hidden name cannot surface a file the steady-state
-      // listing would hide.
-      def dataName(name: String): Boolean =
-        !hidden(name) && name.toLowerCase.endsWith(".edf")
-      // One directory's full resolution — shared by direct directory
-      // loads and glob-matched directories (whose fences live inside
-      // them, found by this listing).
-      def loadDir(d: Path): Seq[EdfInputPartition] = {
-        val listed = fs.listStatus(d).toSeq.filter(_.isFile).map(_.getPath)
-        resolveDir(d,
-          listed.map(_.toString).filter(f =>
-            dataName(f.substring(f.lastIndexOf('/') + 1))),
-          EdfBatchWrite.fencesOf(listed),
-          dataName)
-      }
-      val parts: Seq[EdfInputPartition] =
+        val p = new Path(pathSpec)
+        val fs = p.getFileSystem(conf)
+        // The hidden-name convention ([[EdfBatchWrite.hiddenName]]) keeps
+        // the writer's `_temporary` staging tree out of data scans.
+        def dataName(name: String): Boolean =
+          !EdfBatchWrite.hiddenName(name) && name.toLowerCase.endsWith(".edf")
+        // A directory load serves its `.edf` children, one level deep.
+        def loadDir(d: Path): Seq[EdfInputPartition] =
+          fs.listStatus(d).toSeq.filter(_.isFile).map(_.getPath)
+            .filter(f => dataName(f.getName))
+            .map(f => EdfInputPartition(f.toString))
         if (fs.isDirectory(p)) loadDir(p)
         else {
-          // Glob loads get the SAME fence resolution as directory
-          // loads. Fence files never match a data glob (`*.edf`), so
-          // probe for them with two sibling globs on the pattern's
-          // parent — constant RPC cost however many directories the
-          // glob spans; parents without fences (the steady state)
-          // resolve to plain partitions. The probe runs even when the
-          // data glob matches NOTHING: an in-flight export whose files
-          // are all brand-new (staged, nothing promoted yet) is part of
-          // the committed state and must be visible to glob readers
-          // exactly as a directory load would serve it.
           // Raw globStatus applies NO hidden-file filter: a broad pattern
-          // (`dir/*`) matches this source's own fence files — drop hidden
-          // names, mirroring the directory branch's listing gate.
-          val gsAll = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-            .filterNot(s => hidden(s.getPath.getName))
-          // A glob-matched DIRECTORY expands to its children — each
-          // matched directory gets the full directory-load resolution
-          // instead of being planned as (or silently dropped from) file
-          // partitions. Expansion is ONE level, the same answer a direct
-          // directory load of it gives (this source's directory loads do
-          // not recurse into subdirectories).
-          val (dirMatches, gs) = gsAll.partition(_.isDirectory)
-          val fromDirs = dirMatches.map(_.getPath).sortBy(_.toString)
-            .flatMap(loadDir)
-          val filesByDir = gs.map(_.getPath).groupBy(_.getParent)
-          // The sibling fence probe and the pending-name gate both come
-          // from a TEXTUAL parent/name split of the pattern. A slash
-          // inside braces ({a,a/b.edf}) breaks that split — so expand
-          // those braces FIRST (GlobExpander, the globber's own first
-          // step): every resulting alternative's remaining braces are
-          // slash-free, making its parent/name split a valid glob again.
-          // Each alternative probes fences under its own parent pattern
-          // and gates pending names by its own name component, so a
-          // fence-only directory (an export whose matching files are ALL
-          // still staged) is visible to brace-with-slash patterns exactly
-          // as to plain ones.
-          def probeFences(dirPattern: Path): Seq[Path] =
-            Seq(EdfBatchWrite.ManifestPrefix,
-              EdfBatchWrite.CommittedPrefix).flatMap { pre =>
-              Option(fs.globStatus(new Path(dirPattern, pre + "*")))
-                .toSeq.flatten.filter(_.isFile).map(_.getPath)
-            }
-          // Validate a split piece WITHOUT I/O (GlobFilter compiles the
-          // pattern eagerly and does no RPC), so only pattern-syntax
-          // failures take the degrade path — a genuine I/O failure inside
-          // the probe itself must stay loud, never silently thin the scan.
-          def validGlob(s: String): Boolean =
-            try { new org.apache.hadoop.fs.GlobFilter(s); true }
-            catch { case _: java.io.IOException => false }
-          val alternatives: Seq[Path] =
-            try org.apache.hadoop.fs.GlobExpander.expand(pathSpec)
-              .asScala.toSeq.map(new Path(_))
-            catch { case _: java.io.IOException => Seq(p) }
-          // Per alternative: its name-component filter plus the parent
-          // patterns to probe (its textual parent; when the alternative
-          // has no parent — a relative single-component pattern — the
-          // actual match parents stand in). Any pattern globStatus
-          // accepted splits cleanly after expansion, so the degrade
-          // branches below are belts only — and LOUD ones: an operator
-          // must know when pending-name discovery was skipped. Probing
-          // never degrades past the actual match parents, so LISTED
-          // matches keep full redirect resolution in every case.
-          val altSplits
-              : Seq[(Option[org.apache.hadoop.fs.GlobFilter], Seq[Path])] =
-            alternatives.map { a =>
-              val nameGlob =
-                try Some(new org.apache.hadoop.fs.GlobFilter(a.getName))
-                catch { case _: java.io.IOException => None }
-              if (nameGlob.isEmpty)
-                graft.Log.warn(s"[edf-read] pattern '$pathSpec': " +
-                  s"alternative '$a' has no valid name-component glob — " +
-                  "pending-name discovery skipped for it; an in-flight " +
-                  "export's not-yet-promoted files may be invisible to " +
-                  "this pattern")
-              val parents: Seq[Path] = Option(a.getParent) match {
-                case Some(par) if validGlob(par.toString) => Seq(par)
-                case Some(par) =>
-                  graft.Log.warn(s"[edf-read] pattern '$pathSpec': " +
-                    s"alternative '$a' has no valid parent glob ('$par') " +
-                    "— probing fences on the actual match parents " +
-                    "instead; a fence-only directory is invisible to " +
-                    "this alternative")
-                  filesByDir.keySet.toSeq.sortBy(_.toString)
-                case None =>
-                  // Only the filesystem root has no parent (a relative
-                  // single-component pattern's parent is the empty
-                  // path, handled above) — effectively unreachable, but
-                  // it IS a pending-discovery degrade, so it warns like
-                  // its sibling.
-                  graft.Log.warn(s"[edf-read] pattern '$pathSpec': " +
-                    s"alternative '$a' has no parent to probe — " +
-                    "probing fences on the actual match parents " +
-                    "instead; a fence-only directory is invisible to " +
-                    "this alternative")
-                  filesByDir.keySet.toSeq.sortBy(_.toString)
-              }
-              (nameGlob, parents)
-            }
-          // Probe each distinct parent pattern ONCE (two sibling globs) —
-          // constant RPC per alternative however many directories it
-          // spans; parents without fences (the steady state) cost the
-          // two empty globs and nothing more.
-          val probeByParent: Map[String, Seq[Path]] =
-            altSplits.flatMap(_._2).map(_.toString).distinct
-              .map(s => s -> probeFences(new Path(s))).toMap
-          // Which alternatives saw each fenced directory: pending names
-          // there are served iff they match the name component of an
-          // alternative whose parent pattern reached that directory.
-          val dirGates: Map[Path, Seq[org.apache.hadoop.fs.GlobFilter]] =
-            altSplits.flatMap { case (ngOpt, parents) =>
-              ngOpt.toSeq.flatMap { ng =>
-                parents.flatMap(par => probeByParent(par.toString))
-                  .map(f => f.getParent -> ng)
-              }
-            }.groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
-          val fencesByDir: Map[Path, Seq[EdfBatchWrite.Fence]] =
-            EdfBatchWrite.fencesOf(
-              probeByParent.values.flatten.toSeq.distinct)
-              .groupBy(_.path.getParent)
-          // Every directory with a matching final file OR a fence gets
-          // resolved — a fence-only directory is how a reader sees an
-          // export whose matching files are ALL still staged. A directory
-          // matched both as a dir-match AND as some matched file's parent
-          // (the brace dir-and-file overlap) would be fully resolved
-          // twice — listing, fence probe, manifest reads — with one copy
-          // discarded by the dedup below; skip the file-branch pass only
-          // when the dir branch provably serves a superset: every file
-          // match is a plain data name (which loadDir's gate always
-          // serves) AND the directory carries no fence — with a fence
-          // present, a foreign manifest can mention a non-edf pending
-          // name that only the file branch's alternative gate would
-          // serve, so both branches run and the dedup absorbs the
-          // overlap.
-          val redundant = dirMatches.map(_.getPath).toSet.filter { d =>
-            !fencesByDir.contains(d) &&
-              filesByDir.getOrElse(d, Nil).forall(f => dataName(f.getName))
-          }
-          val dirs = (filesByDir.keySet ++ fencesByDir.keySet -- redundant)
-            .toSeq.sortBy(_.toString)
-          // Pending names a glob serves must themselves match some
-          // alternative's file component, or `load("part-1*.edf")` would
-          // surface an in-flight export's unrelated files.
-          val fromFiles = dirs.flatMap { dir =>
-            val gates = dirGates.getOrElse(dir, Nil)
-            resolveDir(dir,
-              filesByDir.getOrElse(dir, Nil).map(_.toString),
-              fencesByDir.getOrElse(dir, Nil),
-              name => !hidden(name) &&
-                gates.exists(_.accept(new Path(name))))
-          }
-          // A brace glob can match a directory AND a file inside it
-          // (`{day1,day1/rec0.edf}`): the two branches then overlap, and
-          // the union-level dedup below (shared with multi-path loads)
-          // drops the double-read.
-          val resolved = fromDirs ++ fromFiles
-          // The pattern matched NOTHING and no pending name resolved:
-          // keep the pre-fence LOUD behavior — the raw pattern becomes
-          // one partition whose read fails with the underlying
-          // file-not-found, so a typo'd pattern can never silently
-          // return an empty result, and the outcome does not flip when
-          // lingering fences are later cleaned up. (A matched-but-empty
-          // directory, by contrast, resolves to an empty scan — the same
-          // answer a direct directory load of it gives.)
-          if (gsAll.isEmpty && resolved.isEmpty)
-            Seq(EdfInputPartition(pathSpec, noMatch = true))
+          // (`dir/*`) would match bookkeeping names — drop them, mirroring
+          // the directory branch's listing gate.
+          val matched = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
+            .filterNot(s => EdfBatchWrite.hiddenName(s.getPath.getName))
+          // A glob-matched DIRECTORY expands to its children — the same
+          // answer a direct directory load of it gives.
+          val (dirMatches, fileMatches) = matched.partition(_.isDirectory)
+          val resolved =
+            dirMatches.map(_.getPath).sortBy(_.toString).flatMap(loadDir) ++
+              fileMatches.map(s => EdfInputPartition(s.getPath.toString))
+          // The pattern matched NOTHING: the raw pattern becomes one
+          // partition whose read fails with the underlying file-not-found,
+          // so a typo'd pattern can never silently return an empty result.
+          // (A matched-but-empty directory, by contrast, resolves to an
+          // empty scan — the same answer a direct directory load gives.)
+          if (matched.isEmpty) Seq(EdfInputPartition(pathSpec, noMatch = true))
           else resolved
         }
-      parts
-      } // planSpec
-      // Union of the per-spec plans, dedup'd by logical path — the ONE
-      // dedup point, covering both overlap classes: a file reachable
-      // through two specs (`load(dir, s"$dir/rec0.edf")`) and a brace
-      // glob's dir-and-file overlap within one spec. The loud no-match
-      // partition stays per spec: ONE typo'd path in a multi-path load
-      // fails the read rather than silently thinning it.
-      // The loud no-match partition is exempt from path pushdown: a
-      // typo'd spec must fail the read even when a pushed `path`
-      // predicate doesn't match the raw pattern string — pruning it
-      // would turn the guaranteed failure into a silent empty result.
+      }
+      // Union of the per-spec plans, dedup'd by path — the ONE dedup
+      // point, covering both overlap classes: a file reachable through two
+      // specs (`load(dir, s"$dir/rec0.edf")`) and a brace glob's
+      // dir-and-file overlap within one spec. The loud no-match partition
+      // stays per spec — ONE typo'd path in a multi-path load fails the
+      // read rather than silently thinning it — and is exempt from path
+      // pushdown: pruning it would turn the guaranteed failure into a
+      // silent empty result.
       pathSpecs.flatMap(planSpec).distinctBy(_.path)
         .filter(part => part.noMatch || pathOk(part.path))
         .map(p => p: InputPartition)
@@ -1069,17 +555,13 @@ private class EdfScanBuilder(pathSpecs: Seq[String], chunkRecords: Int,
   }
 }
 
-/** One file to read. `path` is the LOGICAL path (what the `path` column
-  * reports and what pushdown filters match); `readPaths` are the physical
-  * candidates tried in order — non-empty only when a staged manifest
-  * redirects this file (staged copy first, promoted final as fallback, so
-  * the staged→final rename racing this reader cannot lose the file).
-  * `noMatch` marks the loud partition a spec that matched nothing plans —
-  * its read fails with the underlying file-not-found, and it is exempt
-  * from path pushdown so a filter cannot silently prune the failure.
+/** One file to read. `path` is what the `path` column reports and what
+  * pushdown filters match. `noMatch` marks the loud partition a spec that
+  * matched nothing plans — its read fails with the underlying
+  * file-not-found, and it is exempt from path pushdown so a filter cannot
+  * silently prune the failure.
   */
 private case class EdfInputPartition(path: String,
-    readPaths: Seq[String] = Nil,
     noMatch: Boolean = false) extends InputPartition
 
 private class EdfReaderFactory(
@@ -1091,8 +573,7 @@ private class EdfReaderFactory(
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[EdfInputPartition]
-    val path = part.path
+    val path = partition.asInstanceOf[EdfInputPartition].path
     new PartitionReader[InternalRow] {
       private val needSamples = required.fieldNames.contains("samples")
 
@@ -1119,21 +600,7 @@ private class EdfReaderFactory(
       }
 
       private lazy val rows: Iterator[InternalRow] = {
-        // Manifest-redirected partitions carry physical candidates in
-        // order (staged first, promoted final as fallback): a promotion
-        // racing this reader moves the file between them atomically, so
-        // exactly one candidate has the bytes.
-        val candidates =
-          if (part.readPaths.nonEmpty) part.readPaths else Seq(path)
-        var bytes: Array[Byte] = null
-        var i = 0
-        while (bytes == null) {
-          try bytes = readWhole(candidates(i))
-          catch {
-            case _: java.io.FileNotFoundException
-                if i < candidates.length - 1 => i += 1
-          }
-        }
+        val bytes = readWhole(path)
         // Header-only parse suffices when samples are pruned away; a
         // pushed channel predicate narrows decode to the wanted signals.
         val edf =

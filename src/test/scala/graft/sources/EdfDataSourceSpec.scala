@@ -109,21 +109,6 @@ class EdfDataSourceSpec extends SparkSpec {
     }
   }
 
-  /** Comparable content view through the edf source: (file, channel) ->
-    * full signal. Uses the logical `path` column, so staged-manifest
-    * redirects are transparent to the comparison.
-    */
-  private def signalView(out: String): Map[(String, String), Seq[Double]] =
-    spark.read.format("edf").option("chunk_records", "4").load(out)
-      .withColumn("file", element_at(split(col("path"), "/"), -1))
-      .groupBy("file", "channel")
-      .agg(flatten(sort_array(collect_list(struct(col("chunk_idx"),
-        col("samples"))))("samples")).as("sig"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        r.getSeq[Double](r.fieldIndex("sig")))
-      .toMap
-
   private def msgs(t: Throwable): Seq[String] =
     Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
 
@@ -259,150 +244,6 @@ class EdfDataSourceSpec extends SparkSpec {
       s"staged remainder deleted by abort: $staged")
   }
 
-  test("job commit is reader-atomic: sabotage at every rename index") {
-    // The reference's warehouse load is all-or-nothing per subject with
-    // rollback (tests/test_warehouse.py:293-311). The EDF export's commit
-    // point is the atomic _STAGED_MANIFEST publish: a reader listing the
-    // directory BEFORE it sees the complete old state, one listing AFTER
-    // it resolves every manifested file through its staged copy and sees
-    // the complete new state — even when the promotion rename loop then
-    // fails at ANY index — and EdfExportRecovery.rollForward finishes the
-    // job idempotently.
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import org.apache.spark.sql.connector.write.LogicalWriteInfo
-    val hconf = spark.sparkContext.hadoopConfiguration
-
-    def view(out: String) = signalView(out)
-
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    // v2 content: same recordings, samples halved (distinct bytes).
-    def v2(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("samples", transform(col("samples"), x => x * 0.5))
-    // Expected complete-new view, from a clean v2 write elsewhere.
-    val cleanOut = tmpDir("edfsink_atomic_clean")
-    v2(src).write.format("edf").mode("append").save(cleanOut)
-    val newView = view(cleanOut)
-    assert(newView.keySet.map(_._1) == Set("rec0.edf", "rec1.edf"))
-
-    (0 until 2).foreach { k =>
-      val out = tmpDir(s"edfsink_atomic$k")
-      // Old state: only the OTHER file exists in v1 form, leaving rec<k>'s
-      // final name free for the sabotage squatter (a non-empty directory
-      // a rename-overwrite cannot replace). k=0 fails before anything is
-      // promoted; k=1 fails after rec0 was promoted over its old version.
-      src.where(col("path").contains(s"rec${1 - k}"))
-        .write.format("edf").mode("append").save(out)
-      val oldView = view(out)
-      assert(oldView.keySet.map(_._1) == Set(s"rec${1 - k}.edf"))
-
-      val srcSchema = src.schema
-      // Copy INSIDE the task: the scan reuses its row buffer.
-      val rows =
-        v2(src).queryExecution.toRdd.mapPartitions(_.map(_.copy())).collect()
-      val info = new LogicalWriteInfo {
-        override def queryId(): String = s"atomic-$k"
-        override def schema(): org.apache.spark.sql.types.StructType =
-          srcSchema
-        override def options() = CaseInsensitiveStringMap.empty()
-      }
-      val batch = new EdfDataSource().getTable(srcSchema, Array.empty,
-          java.util.Map.of("path", out))
-        .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
-        .newWriteBuilder(info).build().toBatch
-      val writer = batch.createBatchWriterFactory(null).createWriter(0, 1L)
-      rows.foreach(writer.write)
-      val msg = writer.commit().asInstanceOf[EdfWriteCommit]
-      assert(msg.files.map(_._2) == Seq("rec0.edf", "rec1.edf"))
-
-      // Task-committed but job commit point not reached: readers see OLD.
-      assert(view(out) == oldView, s"k=$k: staged files leaked into reads")
-
-      val squatter = java.nio.file.Paths.get(s"$out/rec$k.edf")
-      java.nio.file.Files.createDirectories(squatter)
-      java.nio.file.Files.write(squatter.resolve("keep"), Array[Byte](1))
-      intercept[Exception](batch.commit(Array(msg)))
-      batch.abort(Array(msg)) // Spark aborts after a failed job commit
-
-      // Commit point passed: readers see the COMPLETE new state — the
-      // unsabotaged file as well as the still-staged one — never a mix.
-      assert(view(out) == newView, s"k=$k: reader saw a half-promoted mix")
-
-      // Documented crash recovery: clear the obstruction, roll forward.
-      new org.apache.hadoop.fs.Path(s"$out/rec$k.edf").getFileSystem(hconf)
-        .delete(new org.apache.hadoop.fs.Path(s"$out/rec$k.edf"), true)
-      val promoted = EdfExportRecovery.rollForward(out, hconf)
-      assert(promoted.contains(s"rec$k.edf"), s"k=$k promoted=$promoted")
-      assert(view(out) == newView, s"k=$k: rollForward lost content")
-      // Ignore the local ChecksumFileSystem's dot-file artifacts.
-      val names = listOut(out).filterNot(_.startsWith("."))
-      assert(names.toSet == Set("rec0.edf", "rec1.edf"),
-        s"k=$k: residue after recovery: $names")
-      // Idempotent: a second roll-forward is a no-op.
-      assert(EdfExportRecovery.rollForward(out, hconf).isEmpty)
-    }
-  }
-
-  test("a leftover crashed-export manifest cannot hijack a newer commit") {
-    // The operator's WRONG move after a crashed export: re-run the export
-    // instead of rollForward. The newer job's committed files must win —
-    // the stale manifest must not redirect reads onto its staged bytes,
-    // and a late rollForward must drop (not promote) the stale copies.
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import org.apache.spark.sql.connector.write.LogicalWriteInfo
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val out = tmpDir("edfsink_stale")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .where(col("path").contains("rec0"))
-      .orderBy("path", "channel", "chunk_idx")
-    def scaled(f: Double) =
-      src.withColumn("samples", transform(col("samples"), x => x * f))
-
-    // Export A stages v2, promotion is sabotaged, abort keeps manifest +
-    // staging (the crashed state).
-    val rowsA =
-      scaled(0.5).queryExecution.toRdd.mapPartitions(_.map(_.copy())).collect()
-    val srcSchema = src.schema
-    val info = new LogicalWriteInfo {
-      override def queryId(): String = "stale-a"
-      override def schema(): org.apache.spark.sql.types.StructType = srcSchema
-      override def options() = CaseInsensitiveStringMap.empty()
-    }
-    val batchA = new EdfDataSource().getTable(srcSchema, Array.empty,
-        java.util.Map.of("path", out))
-      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
-      .newWriteBuilder(info).build().toBatch
-    val wA = batchA.createBatchWriterFactory(null).createWriter(0, 1L)
-    rowsA.foreach(wA.write)
-    val msgA = wA.commit()
-    val squatter = java.nio.file.Paths.get(s"$out/rec0.edf")
-    java.nio.file.Files.createDirectories(squatter)
-    java.nio.file.Files.write(squatter.resolve("keep"), Array[Byte](1))
-    intercept[Exception](batchA.commit(Array(msgA)))
-    batchA.abort(Array(msgA))
-    new org.apache.hadoop.fs.Path(s"$out/rec0.edf").getFileSystem(hconf)
-      .delete(new org.apache.hadoop.fs.Path(s"$out/rec0.edf"), true)
-
-    // The re-run: export B commits v3 cleanly. Its commit SEQUENCE
-    // outranks A's crashed manifest (no clocks involved), fencing every
-    // name A staged.
-    scaled(0.25).write.format("edf").mode("append").save(out)
-    val cleanOut = tmpDir("edfsink_stale_clean")
-    scaled(0.25).write.format("edf").mode("append").save(cleanOut)
-    val want = signalView(cleanOut)
-    assert(signalView(out) == want,
-      "stale manifest redirected reads away from the newer commit")
-
-    // Late recovery must drop the stale staged copy, keep B's data, and
-    // clean up A's leftovers.
-    EdfExportRecovery.rollForward(out, hconf)
-    assert(signalView(out) == want,
-      "rollForward overwrote newer committed data with stale staged bytes")
-    val names = listOut(out).filterNot(_.startsWith("."))
-    assert(names.toSet == Set("rec0.edf"),
-      s"crashed-export residue after rollForward: $names")
-  }
-
   test("concurrent queries into one target dir keep separate staging trees") {
     // Staging is keyed by queryId: query A's commit (which clears its own
     // staging and opportunistically the shared _temporary root) must not
@@ -476,416 +317,6 @@ class EdfDataSourceSpec extends SparkSpec {
     assert(lenient == 900L, s"salvaged $lenient samples, want 900")
   }
 
-  test("two crashed exports: the higher-sequence one owns reads and recovery") {
-    // Both exports of the same name crash mid-promotion. Sequence order
-    // (not listing order, not clocks) must decide: readers serve the
-    // SECOND export's staged bytes, and rollForward promotes exactly
-    // those while dropping the first's, then cleans everything.
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import org.apache.spark.sql.connector.write.LogicalWriteInfo
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val out = tmpDir("edfsink_twocrash")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .where(col("path").contains("rec0"))
-      .orderBy("path", "channel", "chunk_idx")
-    def scaled(f: Double) =
-      src.withColumn("samples", transform(col("samples"), x => x * f))
-    val srcSchema = src.schema
-    def crash(qid: String, factor: Double): Unit = {
-      val rows = scaled(factor).queryExecution.toRdd
-        .mapPartitions(_.map(_.copy())).collect()
-      val info = new LogicalWriteInfo {
-        override def queryId(): String = qid
-        override def schema(): org.apache.spark.sql.types.StructType =
-          srcSchema
-        override def options() = CaseInsensitiveStringMap.empty()
-      }
-      val batch = new EdfDataSource().getTable(srcSchema, Array.empty,
-          java.util.Map.of("path", out))
-        .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
-        .newWriteBuilder(info).build().toBatch
-      val w = batch.createBatchWriterFactory(null).createWriter(0, 1L)
-      rows.foreach(w.write)
-      val msg = w.commit()
-      val squatter = java.nio.file.Paths.get(s"$out/rec0.edf")
-      java.nio.file.Files.createDirectories(squatter)
-      java.nio.file.Files.write(squatter.resolve("keep"), Array[Byte](1))
-      intercept[Exception](batch.commit(Array(msg)))
-      batch.abort(Array(msg))
-      new org.apache.hadoop.fs.Path(s"$out/rec0.edf").getFileSystem(hconf)
-        .delete(new org.apache.hadoop.fs.Path(s"$out/rec0.edf"), true)
-    }
-    // Note: "zz-first" sorts AFTER "aa-second" as a string — sequence
-    // numbers, not queryIds, must order the two exports.
-    crash("zz-first", 0.5)
-    crash("aa-second", 0.25)
-    val cleanOut = tmpDir("edfsink_twocrash_clean")
-    scaled(0.25).write.format("edf").mode("append").save(cleanOut)
-    val want = signalView(cleanOut)
-    assert(signalView(out) == want,
-      "reader did not follow the higher-sequence crashed export")
-    val promoted = EdfExportRecovery.rollForward(out, hconf)
-    assert(promoted == Seq("rec0.edf"), promoted.toString)
-    assert(signalView(out) == want,
-      "rollForward promoted the wrong export's bytes")
-    val names = listOut(out).filterNot(_.startsWith("."))
-    assert(names.toSet == Set("rec0.edf"), s"residue: $names")
-  }
-
-  test("a ghost manifest (staging destroyed) degrades reads, never fails them") {
-    // The ambiguous-failure window: a manifest is published but the
-    // staging tree is later destroyed without promotion (e.g. an
-    // ambiguous rename failure followed by an abort that cleaned
-    // staging). Readers must degrade to a consistent view — existing
-    // finals read their (old) bytes, brand-new names vanish — instead
-    // of failing every scan with FileNotFoundException; rollForward
-    // then retires the ghost.
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import org.apache.spark.sql.connector.write.LogicalWriteInfo
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val out = tmpDir("edfsink_ghost")
-    // Old state: rec0 only; the export stages rec0 (update) + rec1 (new).
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    src.where(col("path").contains("rec0"))
-      .write.format("edf").mode("append").save(out)
-    val oldView = signalView(out)
-    val rows = src.withColumn("samples",
-        transform(col("samples"), x => x * 0.5))
-      .queryExecution.toRdd.mapPartitions(_.map(_.copy())).collect()
-    val srcSchema = src.schema
-    val info = new LogicalWriteInfo {
-      override def queryId(): String = "ghost"
-      override def schema(): org.apache.spark.sql.types.StructType =
-        srcSchema
-      override def options() = CaseInsensitiveStringMap.empty()
-    }
-    val batch = new EdfDataSource().getTable(srcSchema, Array.empty,
-        java.util.Map.of("path", out))
-      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
-      .newWriteBuilder(info).build().toBatch
-    val w = batch.createBatchWriterFactory(null).createWriter(0, 1L)
-    rows.foreach(w.write)
-    val msg = w.commit()
-    val squatter = java.nio.file.Paths.get(s"$out/rec0.edf")
-    // rec0 promotion fails first (rec0 sorts before rec1), so NOTHING
-    // promoted; then simulate the staging tree vanishing post-publish.
-    val keepBytes = java.nio.file.Files.readAllBytes(squatter)
-    java.nio.file.Files.delete(squatter)
-    java.nio.file.Files.createDirectories(squatter)
-    java.nio.file.Files.write(squatter.resolve("keep"), Array[Byte](1))
-    intercept[Exception](batch.commit(Array(msg)))
-    batch.abort(Array(msg))
-    new org.apache.hadoop.fs.Path(s"$out/rec0.edf").getFileSystem(hconf)
-      .delete(new org.apache.hadoop.fs.Path(s"$out/rec0.edf"), true)
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/rec0.edf"),
-      keepBytes)
-    new org.apache.hadoop.fs.Path(s"$out/_temporary").getFileSystem(hconf)
-      .delete(new org.apache.hadoop.fs.Path(s"$out/_temporary"), true)
-    // Manifest present, staging gone: the old final must still read and
-    // the never-promoted rec1 must simply be absent.
-    assert(signalView(out) == oldView,
-      "ghost manifest broke or corrupted directory reads")
-    assert(EdfExportRecovery.rollForward(out, hconf).isEmpty)
-    val names = listOut(out).filterNot(_.startsWith("."))
-    assert(names.toSet == Set("rec0.edf"), s"ghost residue: $names")
-  }
-
-  test("a ghost owner falls through to the older surviving staged copy") {
-    // Export A (seq 1) crashes with its staged copy INTACT; export B
-    // (seq 2) crashes AND loses its staging (the ghost). No final file
-    // exists. B nominally outranks A, but it cannot deliver — readers
-    // and recovery must fall through to A's surviving bytes instead of
-    // losing the only remaining copy of the output.
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import org.apache.spark.sql.connector.write.LogicalWriteInfo
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val out = tmpDir("edfsink_ghostowner")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .where(col("path").contains("rec0"))
-      .orderBy("path", "channel", "chunk_idx")
-    def scaled(f: Double) =
-      src.withColumn("samples", transform(col("samples"), x => x * f))
-    val srcSchema = src.schema
-    def crash(qid: String, factor: Double): Unit = {
-      val rows = scaled(factor).queryExecution.toRdd
-        .mapPartitions(_.map(_.copy())).collect()
-      val info = new LogicalWriteInfo {
-        override def queryId(): String = qid
-        override def schema(): org.apache.spark.sql.types.StructType =
-          srcSchema
-        override def options() = CaseInsensitiveStringMap.empty()
-      }
-      val batch = new EdfDataSource().getTable(srcSchema, Array.empty,
-          java.util.Map.of("path", out))
-        .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
-        .newWriteBuilder(info).build().toBatch
-      val w = batch.createBatchWriterFactory(null).createWriter(0, 1L)
-      rows.foreach(w.write)
-      val msg = w.commit()
-      val squatter = java.nio.file.Paths.get(s"$out/rec0.edf")
-      java.nio.file.Files.createDirectories(squatter)
-      java.nio.file.Files.write(squatter.resolve("keep"), Array[Byte](1))
-      intercept[Exception](batch.commit(Array(msg)))
-      batch.abort(Array(msg))
-      new org.apache.hadoop.fs.Path(s"$out/rec0.edf").getFileSystem(hconf)
-        .delete(new org.apache.hadoop.fs.Path(s"$out/rec0.edf"), true)
-    }
-    crash("alive", 0.5)
-    crash("ghosted", 0.25)
-    // Destroy ONLY the ghost's staging subtree.
-    new org.apache.hadoop.fs.Path(s"$out/_temporary/ghosted")
-      .getFileSystem(hconf)
-      .delete(new org.apache.hadoop.fs.Path(s"$out/_temporary/ghosted"), true)
-    val cleanOut = tmpDir("edfsink_ghostowner_clean")
-    scaled(0.5).write.format("edf").mode("append").save(cleanOut)
-    val want = signalView(cleanOut)
-    assert(signalView(out) == want,
-      "reader lost the surviving older staged copy behind a ghost owner")
-    val promoted = EdfExportRecovery.rollForward(out, hconf)
-    assert(promoted == Seq("rec0.edf"), promoted.toString)
-    assert(signalView(out) == want,
-      "rollForward discarded the only surviving copy")
-    val names = listOut(out).filterNot(_.startsWith("."))
-    assert(names.toSet == Set("rec0.edf"), s"residue: $names")
-  }
-
-  test("redirected partitions fall back from a vanished staged path to the final") {
-    // A promotion rename can land between a reader's listing (which
-    // resolved the staged candidate) and its open: the partition carries
-    // both physical candidates, so the read must recover from the final
-    // copy instead of failing on the vanished staged one.
-    val real = s"$dir/rec0.edf"
-    val part = EdfInputPartition(real, Seq(s"$dir/gone-staged.edf", real))
-    val reader = new EdfReaderFactory(EdfDataSource.Schema,
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration), 4).createReader(part)
-    var n = 0
-    while (reader.next()) {
-      assert(reader.get().getUTF8String(0).toString == real,
-        "path column must report the logical path, not the candidate read")
-      n += 1
-    }
-    assert(n == 2 * 3, s"expected 2 channels x 3 chunks, got $n rows")
-  }
-
-  /** Stages `df` into `out` under `qid` and drives the job past its
-    * commit point (manifest published), then sabotages promotion at
-    * `squatName`'s rename — a non-empty directory squatting on the final
-    * name — so the export crashes mid-promotion; the squatter is removed
-    * afterwards. Files whose rename ran before `squatName`'s were
-    * promoted; the rest stay staged behind the manifest. This is the
-    * canonical crashed-export state the fence machinery resolves.
-    */
-  private def stageAndCrash(out: String, qid: String,
-      df: org.apache.spark.sql.DataFrame, squatName: String): Unit = {
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import org.apache.spark.sql.connector.write.LogicalWriteInfo
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val srcSchema = df.schema
-    // Copy INSIDE the task: the scan reuses its row buffer.
-    val rows = df.queryExecution.toRdd.mapPartitions(_.map(_.copy())).collect()
-    val info = new LogicalWriteInfo {
-      override def queryId(): String = qid
-      override def schema(): org.apache.spark.sql.types.StructType = srcSchema
-      override def options() = CaseInsensitiveStringMap.empty()
-    }
-    val batch = new EdfDataSource().getTable(srcSchema, Array.empty,
-        java.util.Map.of("path", out))
-      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
-      .newWriteBuilder(info).build().toBatch
-    val w = batch.createBatchWriterFactory(null).createWriter(0, 1L)
-    rows.foreach(w.write)
-    val msg = w.commit()
-    val squatter = java.nio.file.Paths.get(s"$out/$squatName")
-    java.nio.file.Files.createDirectories(squatter)
-    java.nio.file.Files.write(squatter.resolve("keep"), Array[Byte](1))
-    intercept[Exception](batch.commit(Array(msg)))
-    batch.abort(Array(msg))
-    new org.apache.hadoop.fs.Path(s"$out/$squatName").getFileSystem(hconf)
-      .delete(new org.apache.hadoop.fs.Path(s"$out/$squatName"), true)
-  }
-
-  test("glob load resolves an in-flight export exactly as a directory load") {
-    // Old state: rec1 v1 only. An export of rec0+rec1 (v2) crashes at
-    // rec0's promotion (first rename), so NOTHING is promoted: rec0 is a
-    // brand-new pending name, rec1 a staged redirect over its v1 final.
-    // A glob reader must see the complete new state — same guarantee the
-    // directory-load specs pin — and pending names must be filtered by
-    // the glob's own file component.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val out = tmpDir("edfglob_inflight")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    def v2(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("samples", transform(col("samples"), x => x * 0.5))
-    src.where(col("path").contains("rec1"))
-      .write.format("edf").mode("append").save(out)
-    assert(signalView(s"$out/*.edf").keySet.map(_._1) == Set("rec1.edf"),
-      "glob view of the old state")
-    val cleanOut = tmpDir("edfglob_inflight_clean")
-    v2(src).write.format("edf").mode("append").save(cleanOut)
-    val newView = signalView(cleanOut)
-
-    stageAndCrash(out, "glob-inflight", v2(src), "rec0.edf")
-
-    // Complete new state through the glob: staged redirect (rec1) AND
-    // brand-new pending name (rec0) — never a half-promoted mix.
-    assert(signalView(s"$out/*.edf") == newView,
-      "glob reader did not see the in-flight export's complete state")
-    assert(signalView(out) == signalView(s"$out/*.edf"),
-      "glob and directory loads disagree on the same fenced directory")
-    // Pending names must match the pattern's file component: rec0 is
-    // pending-only (no final exists), rec1 has a final that the pattern
-    // rejects — only rec0's staged bytes may surface.
-    assert(signalView(s"$out/rec0*.edf") ==
-      newView.filter(_._1._1 == "rec0.edf"),
-      "pattern-filtered glob lost the pending name it matches")
-    assert(signalView(s"$out/rec1*.edf") ==
-      newView.filter(_._1._1 == "rec1.edf"),
-      "pattern-filtered glob mixed in names it must not serve")
-
-    // Recovery converges both load spellings on the same final state.
-    val promoted = EdfExportRecovery.rollForward(out, hconf)
-    assert(promoted.toSet == Set("rec0.edf", "rec1.edf"), promoted.toString)
-    assert(signalView(s"$out/*.edf") == newView)
-    val names = listOut(out).filterNot(_.startsWith("."))
-    assert(names.toSet == Set("rec0.edf", "rec1.edf"),
-      s"fence residue after recovery: $names")
-  }
-
-  test("glob load serves an export whose matching files are ALL still staged") {
-    // The round-11 hole: an in-flight export into an EMPTY directory has
-    // zero final files matching the glob, so the data glob alone finds
-    // nothing — the fence probe must still surface the committed
-    // (manifest-published) state, exactly as a directory load does.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val out = tmpDir("edfglob_pendingonly")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    val cleanOut = tmpDir("edfglob_pendingonly_clean")
-    src.write.format("edf").mode("append").save(cleanOut)
-    val want = signalView(cleanOut)
-
-    stageAndCrash(out, "glob-pending-only", src, "rec0.edf")
-    assert(listOut(out).count(_.toLowerCase.endsWith(".edf")) == 0,
-      "precondition: nothing promoted, the glob alone matches zero files")
-
-    assert(signalView(s"$out/*.edf") == want,
-      "glob reader is blind to a committed export that is still fully staged")
-    assert(signalView(out) == want,
-      "directory reader lost the fully-staged export")
-    // A broad pattern must not plan the commit protocol's own bookkeeping
-    // (the manifest file, the _temporary tree) as EDF data.
-    assert(signalView(s"$out/*") == want,
-      "a broad glob planned fence/staging entries as data")
-    // A pattern matching NEITHER finals nor pending names stays a LOUD
-    // failure — never a silent empty result — whether or not fences are
-    // present, so the outcome cannot flip when fences are cleaned up.
-    intercept[Exception](
-      spark.read.format("edf").load(s"$out/nomatch*.edf").collect())
-
-    val promoted = EdfExportRecovery.rollForward(out, hconf)
-    assert(promoted.toSet == Set("rec0.edf", "rec1.edf"), promoted.toString)
-    assert(signalView(s"$out/*.edf") == want, "rollForward changed glob reads")
-    val names = listOut(out).filterNot(_.startsWith("."))
-    assert(names.toSet == Set("rec0.edf", "rec1.edf"), s"residue: $names")
-  }
-
-  test("fence pileup: many crashed exports resolve at every step, then clean up") {
-    // ~25 sequential crashed exports into ONE directory (an operator
-    // re-running a failing job all night), then one successful commit and
-    // a rollForward. At every step readers — directory AND glob — must
-    // serve exactly the newest export's bytes; the pileup must not
-    // multiply partitions; the final state must carry zero fence files.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val out = tmpDir("edfglob_pileup")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .where(col("path").contains("rec0"))
-      .orderBy("path", "channel", "chunk_idx")
-    def scaled(f: Double) =
-      src.withColumn("samples", transform(col("samples"), x => x * f))
-    // Two alternating content versions, precomputed from clean writes —
-    // consecutive steps differ, so a stale-fence win is visible.
-    val wantByFactor = Seq(0.5, 0.25).map { f =>
-      val c = tmpDir(s"edfglob_pileup_clean_$f")
-      scaled(f).write.format("edf").mode("append").save(c)
-      f -> signalView(c)
-    }.toMap
-    val steps = 25
-    (1 to steps).foreach { i =>
-      val f = if (i % 2 == 1) 0.5 else 0.25
-      stageAndCrash(out, f"pileup-$i%02d", scaled(f), "rec0.edf")
-      assert(signalView(out) == wantByFactor(f),
-        s"step $i: directory read did not resolve to the newest export")
-      assert(signalView(s"$out/*.edf") == wantByFactor(f),
-        s"step $i: glob read did not resolve to the newest export")
-    }
-    assert(listOut(out).count(_.startsWith("_STAGED_MANIFEST-")) == steps)
-    // 25 manifests all mention rec0.edf: resolution must still plan ONE
-    // partition for it, not one per fence.
-    assert(spark.read.format("edf").load(s"$out/*.edf")
-      .rdd.getNumPartitions == 1,
-      "fence pileup multiplied input partitions")
-
-    // One successful export outranks the whole pileup...
-    val cleanOut = tmpDir("edfglob_pileup_final")
-    src.write.format("edf").mode("append").save(cleanOut)
-    val want = signalView(cleanOut)
-    src.write.format("edf").mode("append").save(out)
-    assert(signalView(out) == want, "pileup outlived a successful commit")
-    assert(signalView(s"$out/*.edf") == want)
-    // ...and recovery retires every fence and stale staged copy.
-    assert(EdfExportRecovery.rollForward(out, hconf).isEmpty,
-      "rollForward re-promoted stale crashed exports over committed data")
-    assert(signalView(out) == want, "rollForward changed committed content")
-    val names = listOut(out).filterNot(_.startsWith("."))
-    assert(names.toSet == Set("rec0.edf"),
-      s"fence files or staging survived recovery: $names")
-  }
-
-  test("multi-directory glob: steady-state and fully-staged dirs resolve per parent") {
-    // One glob spanning two directories: `a/` is steady state (committed
-    // finals, zero fences — must pay no fence machinery and serve its
-    // files plainly); `b/` holds an in-flight export whose matching files
-    // are ALL still staged (a fence-only parent the data glob alone
-    // cannot see). The parent component of the pattern is itself a glob,
-    // so the sibling fence probe must expand it.
-    val base = tmpDir("edfglob_multi")
-    val aDir = s"$base/a"; val bDir = s"$base/b"
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    def v2(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("samples", transform(col("samples"), x => x * 0.5))
-    src.where(col("path").contains("rec0"))
-      .write.format("edf").mode("append").save(aDir)
-    val cleanB = tmpDir("edfglob_multi_cleanb")
-    v2(src).write.format("edf").mode("append").save(cleanB)
-    stageAndCrash(bDir, "glob-multi", v2(src), "rec0.edf")
-    assert(listOut(bDir).count(_.toLowerCase.endsWith(".edf")) == 0,
-      "precondition: b/ is a fence-only directory for the data glob")
-
-    // View keyed by the last TWO path components (basenames collide
-    // across the two directories).
-    val got = spark.read.format("edf").option("chunk_records", "4")
-      .load(s"$base/*/*.edf")
-      .withColumn("file", concat_ws("/",
-        element_at(split(col("path"), "/"), -2),
-        element_at(split(col("path"), "/"), -1)))
-      .groupBy("file", "channel")
-      .agg(flatten(sort_array(collect_list(struct(col("chunk_idx"),
-        col("samples"))))("samples")).as("sig"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        r.getSeq[Double](r.fieldIndex("sig")))
-      .toMap
-    val want =
-      signalView(aDir).map { case ((f, c), s) => (s"a/$f", c) -> s } ++
-        signalView(cleanB).map { case ((f, c), s) => (s"b/$f", c) -> s }
-    assert(got == want,
-      "multi-directory glob did not resolve each parent independently")
-  }
-
   test("hidden output basenames fail loudly and commit nothing") {
     // Underscore/dot-prefixed names are bookkeeping by filesystem
     // convention — readers (this source's and Spark's) never serve them.
@@ -906,178 +337,56 @@ class EdfDataSourceSpec extends SparkSpec {
       s"staging survived the refused commit: ${listOut(out)}")
   }
 
-  test("a glob-matched directory expands to its children with fence resolution") {
-    // Spark's file sources expand a glob-matched directory to its
-    // children; this source must do the same — including the full
-    // commit-protocol resolution for a matched directory whose export is
-    // still entirely staged (its fences live INSIDE it, not beside it).
-    val base = tmpDir("edfglob_dirmatch")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    def v2(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("samples", transform(col("samples"), x => x * 0.5))
-    src.where(col("path").contains("rec0"))
-      .write.format("edf").mode("append").save(s"$base/day1")
-    val cleanDay2 = tmpDir("edfglob_dirmatch_clean")
-    v2(src).write.format("edf").mode("append").save(cleanDay2)
-    stageAndCrash(s"$base/day2", "dir-match", v2(src), "rec0.edf")
+  /** `dir`'s recordings copied into `base/<sub>/` — `which` picks them. */
+  private def copyInto(base: String, sub: String, which: Seq[Int]): String = {
+    val d = java.nio.file.Paths.get(s"$base/$sub")
+    java.nio.file.Files.createDirectories(d)
+    which.foreach(i => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$dir/rec$i.edf"), d.resolve(s"rec$i.edf")))
+    d.toString
+  }
 
+  test("a glob-matched directory expands to its children") {
+    // Spark's file sources expand a glob-matched directory to its
+    // children; this source does the same, one level deep — the answer a
+    // direct directory load of each match gives.
+    val base = tmpDir("edfglob_dirmatch")
+    copyInto(base, "day1", Seq(0))
+    copyInto(base, "day2", Seq(0, 1))
     val got = spark.read.format("edf").option("chunk_records", "4")
       .load(s"$base/*")
-      .withColumn("file", concat_ws("/",
-        element_at(split(col("path"), "/"), -2),
-        element_at(split(col("path"), "/"), -1)))
-      .groupBy("file", "channel")
-      .agg(flatten(sort_array(collect_list(struct(col("chunk_idx"),
-        col("samples"))))("samples")).as("sig"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        r.getSeq[Double](r.fieldIndex("sig")))
-      .toMap
-    val want =
-      signalView(s"$base/day1")
-        .map { case ((f, c), s) => (s"day1/$f", c) -> s } ++
-        signalView(cleanDay2)
-          .map { case ((f, c), s) => (s"day2/$f", c) -> s }
-    assert(got == want,
-      "glob-matched directories were not expanded with full resolution")
+      .select(concat_ws("/", element_at(split(col("path"), "/"), -2),
+        element_at(split(col("path"), "/"), -1)).as("file"))
+      .groupBy("file").agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // Each recording: 2 channels x ceil(10 records / 4) chunks = 6 rows.
+    assert(got == Map("day1/rec0.edf" -> 6L, "day2/rec0.edf" -> 6L,
+      "day2/rec1.edf" -> 6L), got.toString)
     // A brace glob matching BOTH a directory and a file inside it must
-    // not double-read that file: partitions dedup by logical path.
-    // day1 holds one recording: 2 channels x ceil(10/4) chunks = 6 rows.
+    // not double-read that file: partitions dedup by path.
     assert(spark.read.format("edf").option("chunk_records", "4")
       .load(s"$base/{day1,day1/rec0.edf}").count() == 6,
       "brace glob matching a dir and a file inside it double-read the file")
   }
 
-  test("a brace-with-slash glob sees a fence-only directory") {
-    // The round-12 blind spot: a slash inside braces breaks the textual
-    // parent/name split, and the old fallback could not discover a
-    // directory visible ONLY through its fences (an export whose matching
-    // files are all still staged). The planner now expands such braces
-    // into alternatives first (the globber's own first step), so each
-    // alternative probes fences under its own parent — day2 below must be
-    // served even though no final file of it matches anything.
-    val base = tmpDir("edfglob_braceslash")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    def v2(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("samples", transform(col("samples"), x => x * 0.5))
-    src.where(col("path").contains("rec0"))
-      .write.format("edf").mode("append").save(s"$base/day1")
-    val cleanDay2 = tmpDir("edfglob_braceslash_clean")
-    v2(src).write.format("edf").mode("append").save(cleanDay2)
-    stageAndCrash(s"$base/day2", "brace-slash", v2(src), "rec0.edf")
-    assert(listOut(s"$base/day2").count(_.toLowerCase.endsWith(".edf")) == 0,
-      "precondition: day2 is fence-only for any data glob")
-
-    def twoLevelView(pattern: String) =
-      spark.read.format("edf").option("chunk_records", "4").load(pattern)
-        .withColumn("file", concat_ws("/",
-          element_at(split(col("path"), "/"), -2),
-          element_at(split(col("path"), "/"), -1)))
-        .groupBy("file", "channel")
-        .agg(flatten(sort_array(collect_list(struct(col("chunk_idx"),
-          col("samples"))))("samples")).as("sig"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          r.getSeq[Double](r.fieldIndex("sig")))
-        .toMap
-    val day1View = signalView(s"$base/day1")
-      .map { case ((f, c), s) => (s"day1/$f", c) -> s }
-    val day2View = signalView(cleanDay2)
-      .map { case ((f, c), s) => (s"day2/$f", c) -> s }
-
-    assert(twoLevelView(s"$base/{day1/rec0.edf,day2/*.edf}") ==
-      day1View ++ day2View,
-      "brace-with-slash pattern was blind to the fence-only directory")
-    // Pending names still obey the alternative's OWN name component:
-    // rec0* must surface day2's pending rec0 but not its pending rec1.
-    assert(twoLevelView(s"$base/{day1/rec0.edf,day2/rec0*.edf}") ==
-      day1View ++ day2View.filter(_._1._1 == "day2/rec0.edf"),
-      "pending names leaked past their alternative's name component")
-  }
-
-  test("a manifest-mentioned non-edf name stays hidden from directory loads") {
-    // The steady-state listing only serves *.edf; a pending
-    // (mentioned-but-unlisted) name must pass the same gate, or an
-    // in-flight export would surface files the committed state hides.
-    // Our own writer normalizes basenames to *.edf, so a non-edf mention
-    // can only come from a hand-made/foreign manifest — plant one.
-    val out = tmpDir("edfglob_nonedf")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .where(col("path").contains("rec0"))
-      .orderBy("path", "channel", "chunk_idx")
-    src.write.format("edf").mode("append").save(out)
-    val want = signalView(out) // rec0 only, committed
-    val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$out/rec0.edf"))
-    val staging = java.nio.file.Paths.get(s"$out/_temporary/handmade")
-    java.nio.file.Files.createDirectories(staging)
-    java.nio.file.Files.write(staging.resolve("weird.bin"), bytes)
-    java.nio.file.Files.write(staging.resolve("rec1.edf"), bytes)
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-      s"$out/${EdfBatchWrite.fenceName(EdfBatchWrite.ManifestPrefix, 1, "handmade")}"),
-      (s"${staging.resolve("weird.bin")}\tweird.bin\n" +
-        s"${staging.resolve("rec1.edf")}\trec1.edf\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // The pending *.edf name is served from staging; the non-edf name is
-    // hidden from directory AND *.edf-glob loads, exactly as the
-    // steady-state listing would hide its final file.
-    val wantWithRec1 = want ++ want.map { case ((_, ch), sig) =>
-      ("rec1.edf", ch) -> sig
-    }
-    assert(signalView(out) == wantWithRec1,
-      "directory load served (or lost) a pending name inconsistently")
-    assert(signalView(s"$out/*.edf") == wantWithRec1,
-      "glob load disagrees with the directory load under a foreign manifest")
-    assert(!spark.read.format("edf").load(out).select("path").distinct()
-      .collect().map(_.getString(0)).exists(_.endsWith("weird.bin")),
-      "pending non-edf name leaked into a directory load")
-  }
-
-  test("multi-path load unions per-path plans with full fence resolution") {
+  test("multi-path load unions per-path plans and dedups overlaps") {
     // `load(a, b, …)` arrives as a JSON-encoded `paths` array (Spark's
-    // DataFrameReader convention). It must plan the UNION of the
-    // per-path plans — including commit-protocol resolution for a path
-    // whose export is still entirely staged — dedup a file reachable
-    // through two specs by logical path, and keep ONE typo'd member a
-    // loud failure instead of a silently thinner result.
+    // DataFrameReader convention). It plans the UNION of the per-path
+    // plans, reads a file reachable through two specs once, and keeps ONE
+    // typo'd member a loud failure instead of a silently thinner result.
     val base = tmpDir("edfmulti")
-    val aDir = s"$base/a"; val bDir = s"$base/b"
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    def v2(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("samples", transform(col("samples"), x => x * 0.5))
-    src.where(col("path").contains("rec0"))
-      .write.format("edf").mode("append").save(aDir)
-    val cleanB = tmpDir("edfmulti_cleanb")
-    v2(src).write.format("edf").mode("append").save(cleanB)
-    stageAndCrash(bDir, "multi-path", v2(src), "rec0.edf")
-    assert(listOut(bDir).count(_.toLowerCase.endsWith(".edf")) == 0,
-      "precondition: b/ is fully staged")
-
-    def twoLevelView(paths: String*) =
-      spark.read.format("edf").option("chunk_records", "4")
-        .load(paths: _*)
-        .withColumn("file", concat_ws("/",
-          element_at(split(col("path"), "/"), -2),
-          element_at(split(col("path"), "/"), -1)))
-        .groupBy("file", "channel")
-        .agg(flatten(sort_array(collect_list(struct(col("chunk_idx"),
-          col("samples"))))("samples")).as("sig"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          r.getSeq[Double](r.fieldIndex("sig")))
-        .toMap
-    val want =
-      signalView(aDir).map { case ((f, c), s) => (s"a/$f", c) -> s } ++
-        signalView(cleanB).map { case ((f, c), s) => (s"b/$f", c) -> s }
-    assert(twoLevelView(aDir, bDir) == want,
-      "multi-path load did not union per-path plans with fence resolution")
-    // A dir spec + a glob spec over the same files: dedup by logical
-    // path, not a double-read.
-    assert(twoLevelView(aDir, s"$aDir/*.edf") ==
-      want.filter(_._1._1.startsWith("a/")),
+    val aDir = copyInto(base, "a", Seq(0))
+    val bDir = copyInto(base, "b", Seq(0, 1))
+    def files(paths: String*): Map[String, Long] =
+      spark.read.format("edf").option("chunk_records", "4").load(paths: _*)
+        .select(concat_ws("/", element_at(split(col("path"), "/"), -2),
+          element_at(split(col("path"), "/"), -1)).as("file"))
+        .groupBy("file").agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(files(aDir, bDir) == Map("a/rec0.edf" -> 6L, "b/rec0.edf" -> 6L,
+      "b/rec1.edf" -> 6L))
+    // A dir spec + a glob spec over the same files: one read each.
+    assert(files(aDir, s"$aDir/*.edf") == Map("a/rec0.edf" -> 6L),
       "overlapping multi-path specs double-read or lost files")
     // One bad member fails the whole read loudly.
     intercept[Exception](
